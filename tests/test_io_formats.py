@@ -59,7 +59,8 @@ def test_compact_parquet_bounds_file_count(spark, sf_dir, tmp_path):
 
 def test_compact_parquet_partitioned_keeps_layout(spark, sf_dir, tmp_path):
     """Partitioned compaction must preserve the partition directory layout
-    (and prune-ability) while cutting per-partition file counts."""
+    (and prune-ability) and leave exactly one file per partition value:
+    the rewrite hash-repartitions on the partition column."""
     import glob
 
     from filmdatawarehouse_spark.io.sinks import compact_parquet
@@ -79,7 +80,7 @@ def test_compact_parquet_partitioned_keeps_layout(spark, sf_dir, tmp_path):
     compact_parquet(spark, path, target_files=2, partition_by="o_orderstatus")
     for s in statuses:
         files = glob.glob(f"{path}/o_orderstatus={s}/*.parquet")
-        assert 1 <= len(files) <= 2
+        assert len(files) == 1
     assert spark.read.parquet(path).count() == before
 
 

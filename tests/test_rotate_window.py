@@ -199,6 +199,16 @@ def test_include_takes_priority_filler_slots():
     assert "q05" in window
 
 
+def test_include_duplicates_take_one_slot():
+    # a name repeated in --include fills one slot, in first-seen order
+    ledger = {n: 7 for n in REG}
+    window = derive_window(
+        REG, ledger, 8, defer=[], window_size=3, include=["q09", "q04", "q09"]
+    )
+    assert window[:2] == ["q09", "q04"]
+    assert len(set(window)) == len(window) == 3
+
+
 def test_include_validates_names_and_capacity():
     import pytest as _pytest
 

@@ -137,6 +137,59 @@ def test_fact_write_is_idempotent(tmp_path, sources):
     assert spark.read.parquet(path).count() == 3
 
 
+def test_fact_write_layout_one_file_per_date_spread_over_tasks(spark, tmp_path):
+    """write_fact hash-repartitions on the date key to defaultParallelism
+    tasks: each date directory gets exactly one file, the content is
+    unchanged, and the write's final stage runs more than one task (AQE
+    would otherwise coalesce a small fact into one task writing every
+    date in sequence)."""
+    import glob
+    import time
+
+    n_dates = 25
+    fact = (
+        spark.range(0, 600, numPartitions=4)
+        .select(
+            (F.lit(20050101) + F.col("id") % n_dates).cast("int").alias("date_id"),
+            F.col("id").alias("film_id"),
+            (F.col("id") % 7).alias("inventory_count"),
+        )
+    )
+    assert fact.rdd.getNumPartitions() >= 3
+    path = str(tmp_path / "fact_layout")
+    sc = spark.sparkContext
+    group = f"write-fact-layout-{time.time_ns()}"
+    sc.setJobGroup(group, "write_fact layout")
+    try:
+        write_fact(fact, path, partition_by="date_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    dirs = glob.glob(f"{path}/date_id=*")
+    assert len(dirs) == n_dates
+    for d in dirs:
+        assert len(glob.glob(f"{d}/part-*.parquet")) == 1, d
+
+    back = spark.read.parquet(path).select(*fact.columns)
+    assert back.exceptAll(fact).count() == 0
+    assert fact.exceptAll(back).count() == 0
+
+    if sc.defaultParallelism > 1:
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 10
+        while True:
+            infos = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+            settled = infos and all(
+                i is not None and i.status != "RUNNING" for i in infos
+            )
+            if settled or time.monotonic() > deadline:
+                break
+            time.sleep(0.05)
+        final = tracker.getStageInfo(max(s for i in infos for s in i.stageIds))
+        assert final is not None and final.numTasks > 1, final
+
+
 def test_wired_dag_logs_clean_counts_without_extra_jobs(
     spark, sources, tmp_path, capsys
 ):

@@ -101,7 +101,7 @@ def derive_window(
     # changed this round and should re-certify ahead of staleness math
     # (e.g. a VERDICT "give them slots" list). Validated like everything
     # else; they can never displace a mandatory entry, only other filler.
-    include = [n for n in (include or []) if n not in window]
+    include = [n for n in dict.fromkeys(include or []) if n not in window]
     unknown_inc = [n for n in include if n not in reg]
     if unknown_inc:
         raise SystemExit(f"--include names not registered: {unknown_inc}")
